@@ -307,6 +307,7 @@ def phrase_probe_once(cpus: int, n_docs: int, fp: str) -> dict:
     from knowledgeir_spark.index.positions import write_positions_store
     from knowledgeir_spark.index.query import IndexReader
     from knowledgeir_spark.oracle.tokenizer import tokenize_doc
+    from knowledgeir_spark.plans.lineage import live_generation
     from knowledgeir_spark.session import get_spark
 
     idx_dir = os.path.join(CACHE, f"phrase_idx_{n_docs}_{fp}")
@@ -330,7 +331,9 @@ def phrase_probe_once(cpus: int, n_docs: int, fp: str) -> dict:
     if not os.path.isdir(os.path.join(idx_dir, "positions")):
         write_positions_store(docs, idx_dir)
     out["positions_write_sec"] = round(time.time() - t0, 3)
-    for part in ("postings", "docstore", "positions"):
+    out["postings_bytes"] = _dir_bytes(
+        os.path.join(live_generation(idx_dir), "postings"))
+    for part in ("docstore", "positions"):
         out[f"{part}_bytes"] = _dir_bytes(os.path.join(idx_dir, part))
 
     # phrase queries FROM the corpus (the 2-gram at token offset 3 of
@@ -375,13 +378,14 @@ def phrase_probe_once(cpus: int, n_docs: int, fp: str) -> dict:
 
 
 def freshness_once(cpus: int, n_docs: int, fp: str) -> dict:
-    """Subprocess entry: streaming ingest -> append compaction -> serving
+    """Subprocess entry: streaming ingest -> compaction -> serving
     freshness (verdict item 6).  1M-doc base + rolling 1% delta batches;
-    per batch: time-to-queryable (streamed delta build + O(delta) append
-    fold + reader open + planted-term hit) and sustained delta docs/sec.
-    Crash-replay assertions run mid-drill: (a) re-invoking the stream is a
-    no-op (checkpoint dedupe), (b) a simulated stats-commit crash heals on
-    the next compact (the lineage protocol, under the streaming path)."""
+    per batch: time-to-queryable (streamed delta build + fold of the
+    touched buckets + reader open + planted-term hit) and sustained delta
+    docs/sec.  Crash-replay assertions run mid-drill: (a) re-invoking the
+    stream is a no-op (checkpoint dedupe), (b) a lost generation commit
+    heals on the next compact (the CURRENT protocol, under the streaming
+    path)."""
     import json as _json
 
     from pyspark.sql import functions as F
@@ -394,6 +398,7 @@ def freshness_once(cpus: int, n_docs: int, fp: str) -> dict:
     )
     from knowledgeir_spark.index.compact import compact
     from knowledgeir_spark.index.query import IndexReader
+    from knowledgeir_spark.plans.lineage import generation_number, live_generation
     from knowledgeir_spark.session import get_spark
     from knowledgeir_spark.streaming.incremental import incremental_index
 
@@ -432,7 +437,7 @@ def freshness_once(cpus: int, n_docs: int, fp: str) -> dict:
         incremental_index(spark, stream_in, root, schema, cfg)
         t_ingest = time.time() - t0
         t1 = time.time()
-        compact(spark, root, cfg, mode="append")
+        compact(spark, root, cfg)
         t_compact = time.time() - t1
         t2 = time.time()
         rd = IndexReader(spark, root)
@@ -466,30 +471,22 @@ def freshness_once(cpus: int, n_docs: int, fp: str) -> dict:
          if d.startswith("batch_")]
     )
     out["stream_replay_is_noop"] = n_deltas_after == n_deltas
-    # (b) simulated stats-commit crash (postings swapped, field_stats not):
-    # roll field_stats back as if the process died between the two commits,
-    # then re-run compact — the heal path must restore exact counts
-    fs_path = os.path.join(root, "field_stats.json")
-    with open(fs_path) as f:
+    # (b) a lost commit: roll CURRENT back one generation as if the
+    # process died before the last fold's commit, then re-run compact — it
+    # must commit the same generation again with exact counts
+    live = live_generation(root)
+    with open(os.path.join(live, "field_stats.json")) as f:
         fs_good = _json.load(f)
-    fs_crash = dict(fs_good)
-    last = sorted(fs_good.get("folded_deltas", []))[-1]
-    with open(os.path.join(root, "deltas", last, "delta_stats.json")) as f:
-        ds = _json.load(f)
-    fs_crash["folded_deltas"] = [
-        b for b in fs_good["folded_deltas"] if b != last
-    ]
-    fs_crash["n_docs"] -= ds["n_docs"]
-    fs_crash["total_len"] -= ds["total_len"]
-    with open(fs_path, "w") as f:
-        _json.dump(fs_crash, f)
-    compact(spark, root, cfg, mode="append")
-    with open(fs_path) as f:
+    with open(os.path.join(root, "CURRENT"), "w") as f:
+        f.write(f"gen-{generation_number(live) - 1}\n")
+    compact(spark, root, cfg)
+    with open(os.path.join(live_generation(root), "field_stats.json")) as f:
         fs_healed = _json.load(f)
     rd = IndexReader(spark, root)
     still = rd.search_local([("1", f"freshterm{n_batches - 1}")], k=5)
     out["crash_heal_restores_stats"] = (
-        fs_healed["n_docs"] == fs_good["n_docs"]
+        live_generation(root) == live
+        and fs_healed["n_docs"] == fs_good["n_docs"]
         and fs_healed["total_len"] == fs_good["total_len"]
         and bool(still)
     )
@@ -1017,7 +1014,7 @@ def main() -> None:
             extras["phrase_scale"] = leg
 
     # 2b1d. streaming freshness drill (verdict item 6): 1M base + 1%
-    # rolling deltas through incremental_index -> append compact ->
+    # rolling deltas through incremental_index -> compact ->
     # reader; cached on the streaming+compaction code.
     if os.environ.get("KIR_BENCH_FRESH", "1") == "1":
         ffp = _code_fingerprint((

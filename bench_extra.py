@@ -50,6 +50,7 @@ def leg_nextword() -> dict:
     from knowledgeir_spark.index.positions import write_positions_store
     from knowledgeir_spark.index.query import IndexReader
     from knowledgeir_spark.oracle.tokenizer import tokenize_doc
+    from knowledgeir_spark.plans.lineage import live_generation
     from knowledgeir_spark.session import get_spark
 
     sys.path.insert(0, REPO)
@@ -82,7 +83,9 @@ def leg_nextword() -> dict:
     if not os.path.exists(os.path.join(idx, "nextword", "_nextword.json")):
         write_nextword_store(docs, idx)
     out["nextword_write_sec"] = round(time.time() - t0, 2)
-    for part in ("postings", "docstore", "positions", "nextword"):
+    out["postings_bytes"] = _dir_bytes(
+        os.path.join(live_generation(idx), "postings"))
+    for part in ("docstore", "positions", "nextword"):
         out[f"{part}_bytes"] = _dir_bytes(os.path.join(idx, part))
 
     # head-head phrases FROM the corpus: adjacent pairs whose terms are both
@@ -156,6 +159,7 @@ def leg_freshness_batched() -> dict:
     )
     from knowledgeir_spark.index.compact import compact
     from knowledgeir_spark.index.query import IndexReader
+    from knowledgeir_spark.plans.lineage import generation_number, live_generation
     from knowledgeir_spark.session import get_spark
     from knowledgeir_spark.streaming.incremental import incremental_index
 
@@ -202,8 +206,7 @@ def leg_freshness_batched() -> dict:
                 .write.mode("append").parquet(stream_in)
             incremental_index(spark, stream_in, root, schema, cfg)
             ingest_done[i] = time.time()
-            res = compact(spark, root, cfg, mode="append",
-                          min_pending_deltas=policy_n)
+            res = compact(spark, root, cfg, min_pending_deltas=policy_n)
             if res and "deferred" not in res:
                 folds += 1
                 t_fold = time.time()
@@ -217,33 +220,25 @@ def leg_freshness_batched() -> dict:
                 )
         # land any tail (fold whatever is still pending)
         if ingest_done:
-            compact(spark, root, cfg, mode="append")
+            compact(spark, root, cfg)
             folds += 1
             t_fold = time.time()
             for j in list(ingest_done):
                 ttq[j] = round(t_fold - ingest_done[j], 1)
         drill_sec = time.time() - t_drill
-        # crash-heal under the batched policy: roll field_stats back one
-        # delta as if the process died between the two commits
-        fs_path = os.path.join(root, "field_stats.json")
-        with open(fs_path) as f:
+        # crash-heal under the batched policy: roll CURRENT back one
+        # generation as if the process died before the last fold's commit
+        live = live_generation(root)
+        with open(os.path.join(live, "field_stats.json")) as f:
             fs_good = json.load(f)
-        last = sorted(fs_good["folded_deltas"])[-1]
-        with open(os.path.join(root, "deltas", last, "delta_stats.json")) as f:
-            ds_ = json.load(f)
-        fs_crash = dict(fs_good)
-        fs_crash["folded_deltas"] = [
-            b for b in fs_good["folded_deltas"] if b != last
-        ]
-        fs_crash["n_docs"] -= ds_["n_docs"]
-        fs_crash["total_len"] -= ds_["total_len"]
-        with open(fs_path, "w") as f:
-            json.dump(fs_crash, f)
-        compact(spark, root, cfg, mode="append", min_pending_deltas=policy_n)
-        with open(fs_path) as f:
+        with open(os.path.join(root, "CURRENT"), "w") as f:
+            f.write(f"gen-{generation_number(live) - 1}\n")
+        compact(spark, root, cfg, min_pending_deltas=policy_n)
+        with open(os.path.join(live_generation(root), "field_stats.json")) as f:
             fs_healed = json.load(f)
         heal_ok = (
-            fs_healed["n_docs"] == fs_good["n_docs"]
+            live_generation(root) == live
+            and fs_healed["n_docs"] == fs_good["n_docs"]
             and fs_healed["total_len"] == fs_good["total_len"]
         )
         ttq_vals = sorted(ttq.values())

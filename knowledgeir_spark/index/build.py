@@ -8,9 +8,13 @@ Pipeline (each stage an idempotent lineage-tracked commit, plans/lineage.py):
     --[salt = doc_id // salt_range; bucket = md5(term) % n_buckets;
        repartition(term, salt) + sortWithinPartitions(term, salt, doc_id);
        mapInPandas block encoder]-->
-  postings(bucket=*/...)                                     [stage 2]
-  term_stats(term, df, cf)                                   [stage 3]
-  field_stats.json {n_docs, total_len, avg_doc_len}          [stage 4]
+  gen-<N>/postings(bucket=*/...)                             [stage 2]
+  gen-<N>/term_stats(term, df, cf)                           [stage 3]
+  gen-<N>/field_stats.json {n_docs, total_len, avg_doc_len}  [stage 4]
+  CURRENT = "gen-<N>"                                        [commit]
+
+Stages 2-4 form one immutable generation; writing CURRENT (an atomic
+rename) is the commit, and readers resolve it once (plans/lineage.py).
 
 Skew strategy: the salt is a CONTIGUOUS doc_id range bucket, not a random
 hash — so (a) a Zipf head term (df ~ n_docs) is split across ~n_docs/salt_range
@@ -41,7 +45,14 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import doc_terms
-from ..plans.lineage import StageManager, StageResult
+from ..plans.lineage import (
+    StageManager,
+    StageResult,
+    commit_generation,
+    generation_dir,
+    generation_number,
+    live_generation,
+)
 from .codec import BLOCK_SIZE, encode_block
 
 
@@ -389,6 +400,59 @@ def apply_block_encoder(sorted_df: DataFrame, config: IndexConfig) -> DataFrame:
     )
 
 
+def write_blocks(long_form: DataFrame, config: IndexConfig, path: str) -> None:
+    """The one salted block writer: long-form (doc_id, term, tf, doc_len)
+    rows -> posting blocks at path/bucket=<b>/, one term-sorted file per
+    bucket.  The build, the streaming delta writer and the fold all call
+    it, so every generation has the same file layout."""
+    spark = long_form.sparkSession
+    parts = config.build_partitions or spark.conf.get(
+        "spark.sql.shuffle.partitions"
+    )
+    # the configured width is a data-sized floor (spill bound); never run
+    # the encode stage below the session's core count — a 16-partition
+    # shuffle on 32 cores leaves half the Python encoders idle
+    parts = max(int(parts), spark.sparkContext.defaultParallelism)
+    salted = long_form.select(
+        "doc_id", "term",
+        # narrower types across the exchange and the Python boundary
+        # (guide §2.3): tf / doc_len are per-doc token counts, always
+        # int32-safe; the encoder widens back to uint64 so the varint
+        # payloads are byte-identical
+        F.col("tf").cast("int").alias("tf"),
+        F.col("doc_len").cast("int").alias("doc_len"),
+        (F.col("doc_id") / config.salt_range).cast("long").alias("salt"),
+    )
+    (
+        apply_block_encoder(
+            salted.repartition(parts, "term", "salt")
+            .sortWithinPartitions("term", "salt", "doc_id"),
+            config,
+        )
+        # block rows are ~1/100 the size of the long-form postings, so a
+        # second (cheap) exchange by bucket keeps the file count at
+        # ~n_buckets instead of shuffle_partitions x n_buckets tiny files;
+        # sorting by term inside each bucket file gives parquet row-group
+        # min/max stats that let a query skip non-matching row groups; the
+        # leading bucket key is the order partitionBy needs, so Spark adds
+        # no sort of its own that would undo the term order
+        .repartition(config.n_buckets, "bucket")
+        .sortWithinPartitions("bucket", "term", "salt", "block_id")
+        .write.partitionBy("bucket")
+        .parquet(path)
+    )
+
+
+def term_stats_from_blocks(blocks: DataFrame) -> DataFrame:
+    """(term, df, cf) from block METADATA (sum of per-block n_docs /
+    sum_tf): ~1/25 the rows of the long form for identical values, since
+    every doc-term posting lands in exactly one block."""
+    return blocks.groupBy("term").agg(
+        F.sum("n_docs").cast("long").alias("df"),
+        F.sum("sum_tf").cast("long").alias("cf"),
+    )
+
+
 def build_index(
     spark: SparkSession,
     docs_df: DataFrame,
@@ -399,8 +463,14 @@ def build_index(
     id_col: str = "doc_id",
 ) -> dict[str, StageResult]:
     """Build (or resume) the full index at index_dir.  Returns stage results
-    (each .skipped tells whether the committed snapshot was reused)."""
-    mgr = StageManager(index_dir)
+    (each .skipped tells whether the committed snapshot was reused).
+
+    doc_terms stays at the index root; postings, term_stats and
+    field_stats go to a new generation that CURRENT names once all three
+    are committed.  A re-run whose live generation came from this same
+    build is a no-op; a crashed build resumes in its uncommitted
+    generation."""
+    root = StageManager(index_dir)
     # format 2 = sum_tf block column (round 6); bumping the fingerprint keeps
     # resume from ever pairing new term_stats code with an old snapshot
     conf = {"input": input_token, "format": 2, **config.fingerprint_dict()}
@@ -416,64 +486,28 @@ def build_index(
             dt = dt.withColumnRenamed(id_col, "doc_id")
         dt.write.parquet(tmp)
 
-    results["doc_terms"] = mgr.run("doc_terms", conf, write_doc_terms)
-    dt = spark.read.parquet(mgr.stage_path("doc_terms"))
+    results["doc_terms"] = root.run("doc_terms", conf, write_doc_terms)
+    dt = spark.read.parquet(root.stage_path("doc_terms"))
+
+    try:
+        gen = live_generation(index_dir)
+        if not StageManager(gen).is_json_committed("field_stats", conf):
+            gen = generation_dir(index_dir, generation_number(gen) + 1)
+    except FileNotFoundError:
+        gen = generation_dir(index_dir, 0)
+    mgr = StageManager(gen)
 
     # stage 2: salted block build
-    def write_postings(tmp: str):
-        parts = config.build_partitions or spark.conf.get(
-            "spark.sql.shuffle.partitions"
-        )
-        # the configured width is a data-sized floor (spill bound); never run
-        # the encode stage below the session's core count — a 16-partition
-        # shuffle on 32 cores leaves half the Python encoders idle
-        parts = max(int(parts), spark.sparkContext.defaultParallelism)
-        salted = dt.select(
-            "doc_id", "term",
-            # narrower types across the exchange and the Python boundary
-            # (guide §2.3): tf / doc_len are per-doc token counts, always
-            # int32-safe; the encoder widens back to uint64 so the varint
-            # payloads are byte-identical
-            F.col("tf").cast("int").alias("tf"),
-            F.col("doc_len").cast("int").alias("doc_len"),
-            (F.col("doc_id") / config.salt_range).cast("long").alias("salt"),
-        )
-        (
-            apply_block_encoder(
-                salted.repartition(parts, "term", "salt")
-                .sortWithinPartitions("term", "salt", "doc_id"),
-                config,
-            )
-            # block rows are ~1/100 the size of the long-form postings, so a
-            # second (cheap) exchange by bucket keeps the file count at
-            # ~n_buckets instead of shuffle_partitions x n_buckets tiny files;
-            # sorting by term inside each bucket file gives parquet row-group
-            # min/max stats that let a query skip non-matching row groups
-            .repartition(config.n_buckets, "bucket")
-            .sortWithinPartitions("term", "salt", "block_id")
-            .write.partitionBy("bucket")
-            .parquet(tmp)
-        )
+    results["postings"] = mgr.run(
+        "postings", conf, lambda tmp: write_blocks(dt, config, tmp)
+    )
 
-    results["postings"] = mgr.run("postings", conf, write_postings)
-
-    # stage 3: term stats (df = distinct docs, cf = collection tf).
-    # Aggregated from the block METADATA (sum of per-block n_docs / sum_tf)
-    # instead of the long form: ~1/25 the rows for identical values (every
-    # doc-term posting lands in exactly one block).
+    # stage 3: term stats (df = distinct docs, cf = collection tf)
     blocks = spark.read.parquet(mgr.stage_path("postings"))
-
-    def write_term_stats(tmp: str):
-        (
-            blocks.groupBy("term")
-            .agg(
-                F.sum("n_docs").cast("long").alias("df"),
-                F.sum("sum_tf").cast("long").alias("cf"),
-            )
-            .write.parquet(tmp)
-        )
-
-    results["term_stats"] = mgr.run("term_stats", conf, write_term_stats)
+    results["term_stats"] = mgr.run(
+        "term_stats", conf,
+        lambda tmp: term_stats_from_blocks(blocks).write.parquet(tmp),
+    )
 
     # stage 4: field-level scalars (computed over ALL docs incl. empty);
     # total_len = sum of collection tf = sum(cf) over the (small) term_stats
@@ -497,4 +531,5 @@ def build_index(
                 "tokenizer": config.tokenizer,
             },
         )
+    commit_generation(index_dir, gen)
     return results

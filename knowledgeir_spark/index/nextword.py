@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import tokenize_expr, tokenize_simple_expr
+from ..plans.lineage import live_generation
 from .build import term_bucket_expr, term_bucket_py
 
 
@@ -66,22 +67,19 @@ def write_nextword_store(
 
     The head set comes from the sibling index's term_stats (terms with
     df >= head_min_df); tokenizer / n_buckets default to its field_stats so
-    adjacency means "adjacent in the indexed token stream"."""
-    fs_path = os.path.join(index_dir, "field_stats.json")
-    n_docs = 0
-    if os.path.exists(fs_path):
-        with open(fs_path) as f:
-            fs = json.load(f)
-        tokenizer = tokenizer or fs.get("tokenizer", "spec")
-        n_buckets = n_buckets or int(fs.get("n_buckets", 8))
-        n_docs = int(fs.get("n_docs", 0))
-    tokenizer = tokenizer or "spec"
-    n_buckets = n_buckets or 8
+    adjacency means "adjacent in the indexed token stream".  Both come from
+    the live generation; an index_dir without a committed index raises
+    FileNotFoundError."""
+    gen = live_generation(index_dir)
+    with open(os.path.join(gen, "field_stats.json")) as f:
+        fs = json.load(f)
+    tokenizer = tokenizer or fs["tokenizer"]
+    n_buckets = n_buckets or int(fs["n_buckets"])
     if head_min_df is None:
-        head_min_df = max(16, n_docs // 100)
+        head_min_df = max(16, int(fs["n_docs"]) // 100)
 
     spark = docs.sparkSession
-    ts = spark.read.parquet(os.path.join(index_dir, "term_stats"))
+    ts = spark.read.parquet(os.path.join(gen, "term_stats"))
     heads = sorted(
         r["term"] for r in ts.filter(F.col("df") >= head_min_df)
         .select("term").collect()

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import tokenize_expr, tokenize_simple_expr
+from ..plans.lineage import live_generation
 from .build import term_bucket_expr, term_bucket_py
 
 
@@ -51,16 +52,13 @@ def write_positions_store(
 ) -> str:
     """Writes the bucket-partitioned positions store; returns its path.
 
-    tokenizer / n_buckets default to the sibling index's field_stats so the
-    position space and bucket pruning line up with the postings."""
-    fs_path = os.path.join(index_dir, "field_stats.json")
-    if (tokenizer is None or n_buckets is None) and os.path.exists(fs_path):
-        with open(fs_path) as f:
-            fs = json.load(f)
-        tokenizer = tokenizer or fs.get("tokenizer", "spec")
-        n_buckets = n_buckets or int(fs.get("n_buckets", 8))
-    tokenizer = tokenizer or "spec"
-    n_buckets = n_buckets or 8
+    tokenizer / n_buckets default to the index's live field_stats so the
+    position space and bucket pruning line up with the postings; an
+    index_dir without a committed index raises FileNotFoundError."""
+    with open(os.path.join(live_generation(index_dir), "field_stats.json")) as f:
+        fs = json.load(f)
+    tokenizer = tokenizer or fs["tokenizer"]
+    n_buckets = n_buckets or int(fs["n_buckets"])
 
     toks = (
         tokenize_simple_expr(F.col(text_col))

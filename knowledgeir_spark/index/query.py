@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.topk import topk_per_query
+from ..plans.lineage import live_generation
 from .build import term_bucket_py
 from .codec import decode_blocks_concat, decode_ids_concat, decode_payload, delta_decode
 from . import scoring_np as S
@@ -912,7 +913,13 @@ def _lev_le1(a: str, b: str) -> int | None:
 
 
 class IndexReader:
-    """Reads a committed index (build.build_index layout)."""
+    """Reads a committed index (build.build_index layout).
+
+    The reader resolves ``<index_dir>/CURRENT`` once and pins that
+    generation for its lifetime: a fold committed later does not change
+    its answers.  Retention keeps the live generation and its parent, so a
+    pinned reader survives one later commit; after a second one its files
+    are gone and it must be reopened."""
 
     # term_stats tables up to this row count are collected once into a
     # driver-side dict (a few MB); larger vocabularies fall back to a
@@ -922,7 +929,8 @@ class IndexReader:
     def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
         self.index_dir = index_dir
-        with open(os.path.join(index_dir, "field_stats.json")) as f:
+        self.generation_dir = live_generation(index_dir)
+        with open(os.path.join(self.generation_dir, "field_stats.json")) as f:
             self.field_stats = json.load(f)
         self.n_buckets = int(self.field_stats["n_buckets"])
         self.codec = self.field_stats.get("codec", "varint")
@@ -934,8 +942,10 @@ class IndexReader:
         # must tokenize identically); older indexes predate the key
         self.tokenizer = self.field_stats.get("tokenizer", "spec")
         # build the scan DataFrames once (schema discovery is not free)
-        self._postings = spark.read.parquet(os.path.join(index_dir, "postings"))
-        self._term_stats = spark.read.parquet(os.path.join(index_dir, "term_stats"))
+        self._postings = spark.read.parquet(
+            os.path.join(self.generation_dir, "postings"))
+        self._term_stats = spark.read.parquet(
+            os.path.join(self.generation_dir, "term_stats"))
         self._df_cache: dict[str, float] | None = None
         self._df_cache_checked = False
         # serving hot-term cache (decoded postings; one index snapshot per
@@ -1173,7 +1183,8 @@ class IndexReader:
             import pyarrow.dataset as ds
 
             self._pa_dataset = ds.dataset(
-                os.path.join(self.index_dir, "postings"), partitioning="hive"
+                os.path.join(self.generation_dir, "postings"),
+                partitioning="hive",
             )
         return self._pa_dataset
 

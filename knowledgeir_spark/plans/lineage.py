@@ -17,15 +17,62 @@ a metastore/Iceberg snapshot commit; the abstraction point is Stage.commit.
 
 Per-file lineage (rows/bytes per output parquet file = per final partition)
 is read back from parquet footers via pyarrow — no extra Spark job.
+
+Index generations: the stages a reader consumes (postings, term_stats,
+field_stats) live in an immutable ``<index>/gen-<N>/`` with its own
+``_lineage/``.  ``<index>/CURRENT`` names the live generation, and an
+``os.replace`` of that file is the index's only commit point; every
+reader resolves it through ``live_generation``.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import time
 from dataclasses import dataclass, field
+
+CURRENT = "CURRENT"
+# the live generation and its parent: a reader pinned before a commit
+# keeps its files through exactly one later commit
+KEEP_GENERATIONS = 2
+_GEN = re.compile(r"gen-(\d+)$")
+
+
+def generation_dir(index_dir: str, n: int) -> str:
+    return os.path.join(index_dir, f"gen-{n}")
+
+
+def generation_number(gen_dir: str) -> int:
+    return int(_GEN.match(os.path.basename(gen_dir)).group(1))
+
+
+def live_generation(index_dir: str) -> str:
+    """The directory of the generation ``<index_dir>/CURRENT`` names."""
+    try:
+        with open(os.path.join(index_dir, CURRENT)) as f:
+            name = f.read().strip()
+    except FileNotFoundError:
+        raise FileNotFoundError(
+            f"{index_dir} holds no committed index (no {CURRENT} file)"
+        ) from None
+    return os.path.join(index_dir, name)
+
+
+def commit_generation(index_dir: str, gen_dir: str) -> None:
+    """Make gen_dir the live generation (one atomic rename), then drop the
+    generations older than its parent."""
+    tmp = os.path.join(index_dir, CURRENT + ".__tmp__")
+    with open(tmp, "w") as f:
+        f.write(os.path.basename(gen_dir) + "\n")
+    os.replace(tmp, os.path.join(index_dir, CURRENT))
+    live = generation_number(gen_dir)
+    for name in os.listdir(index_dir):
+        m = _GEN.match(name)
+        if m and int(m.group(1)) <= live - KEEP_GENERATIONS:
+            shutil.rmtree(os.path.join(index_dir, name), ignore_errors=True)
 
 
 def _fingerprint(obj) -> str:

@@ -13,8 +13,8 @@ Two modes:
   so memory is bounded by the re-fetch horizon, not the crawl size.  A
   duplicate arriving later than the watermark re-emits; at 10^12-URL scale
   that is the right trade (global exactness is the batch url_dedup pass
-  that follows compaction — same layering as the index's
-  streaming-append/batch-merge split in index/compact.py).
+  that follows compaction — same layering as the index's streaming
+  deltas and their fold in index/compact.py).
 - ``watermark=None``: exact `dropDuplicates` — unbounded state; only for
   bounded replays/backfills.
 

@@ -2,12 +2,11 @@
 
 incremental_index: Structured Streaming over the input table directory with
 Trigger.AvailableNow — each micro-batch of new docs becomes an index DELTA
-(same posting-block layout as the full build) committed under
-<index_root>/deltas/batch_<id>/, with Spark's streaming checkpoint providing
-exactly-once batch tracking (a re-run after a crash re-processes only
-unseen files).  Because build salts are contiguous doc_id ranges, delta
-blocks merge with base blocks by simple (term, first_doc_id) ordering at
-query time — no re-encode.  This is the idiomatic "new crawl lands in the
+(the full build's block writer: one term-sorted file per bucket) committed
+under <index_root>/deltas/batch_<id>/, with Spark's streaming checkpoint
+providing exactly-once batch tracking (a re-run after a crash re-processes
+only unseen files).  index/compact.compact folds pending deltas into the
+next index generation.  This is the idiomatic "new crawl lands in the
 table, index follows" path (Trigger.AvailableNow over parquet; Kafka would
 plug in the same way).
 
@@ -17,36 +16,33 @@ streaming-agg surface), batch-testable via processAllAvailable.
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import doc_terms
-from ..index.build import IndexConfig, apply_block_encoder, term_bucket_expr
+from ..index.build import IndexConfig, write_blocks
 
 
 def _delta_writer(index_root: str, config: IndexConfig):
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import json
+        import pyarrow.parquet as pq
 
         out = os.path.join(index_root, "deltas", f"batch_{batch_id}")
+        # a replayed batch rewrites its delta from scratch
+        shutil.rmtree(out, ignore_errors=True)
         dt = doc_terms(batch_df, simple=(config.tokenizer == "simple"))
         n_docs = batch_df.count()
-        total_len = (dt.groupBy().sum("tf").collect()[0][0]) or 0
-        salted = dt.select(
-            "doc_id", "term", "tf", "doc_len",
-            (F.col("doc_id") / config.salt_range).cast("long").alias("salt"),
-        )
-        (
-            salted.repartition(config.n_buckets, "term", "salt")
-            .sortWithinPartitions("term", "salt", "doc_id")
-            .transform(lambda df: apply_block_encoder(df, config))
-            .write.mode("overwrite").partitionBy("bucket").parquet(out)
-        )
+        write_blocks(dt, config, out)
+        # total_len = sum of tf = sum of the blocks' sum_tf (no re-tokenize)
+        total_len = int(pq.read_table(out, columns=["sum_tf"])["sum_tf"]
+                        .to_numpy().sum())
         # per-delta corpus scalars so compaction can update field_stats exactly
         with open(os.path.join(out, "delta_stats.json"), "w") as f:
-            json.dump({"n_docs": n_docs, "total_len": int(total_len)}, f)
+            json.dump({"n_docs": n_docs, "total_len": total_len}, f)
 
     return write_batch
 

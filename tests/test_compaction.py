@@ -1,7 +1,12 @@
 """Index lifecycle: base build -> streaming deltas -> compaction -> queries
-rank-identical to a from-scratch oracle over the UNION corpus."""
+rank-identical to a from-scratch oracle over the UNION corpus; readers
+pinned to a generation across folds; the CURRENT commit point under
+injected crashes."""
 
 from __future__ import annotations
+
+import json
+import os
 
 import pytest
 
@@ -9,9 +14,23 @@ from knowledgeir_spark.index.build import IndexConfig, build_index
 from knowledgeir_spark.index.compact import compact, decode_postings_df
 from knowledgeir_spark.index.query import IndexReader
 from knowledgeir_spark.oracle.index import OracleIndex
+from knowledgeir_spark.plans.lineage import live_generation
 from knowledgeir_spark.streaming.incremental import incremental_index
 
 CFG = IndexConfig(block_size=16, salt_range=64, n_buckets=4, build_partitions=4)
+
+
+def _live(idx_dir: str, part: str) -> str:
+    return os.path.join(live_generation(idx_dir), part)
+
+
+def _field_stats(idx_dir: str) -> dict:
+    with open(_live(idx_dir, "field_stats.json")) as f:
+        return json.load(f)
+
+
+def _generations(idx_dir: str) -> list[str]:
+    return sorted(d for d in os.listdir(idx_dir) if d.startswith("gen-"))
 
 
 def test_compacted_index_equals_fresh_oracle(spark, webpages_pdf, tmp_path):
@@ -41,7 +60,7 @@ def test_compacted_index_equals_fresh_oracle(spark, webpages_pdf, tmp_path):
     assert reader.field_stats["avg_doc_len"] == pytest.approx(oracle.avg_doc_len, abs=1e-9)
 
     long_form = decode_postings_df(
-        spark.read.parquet(f"{idx_dir}/postings")
+        spark.read.parquet(_live(idx_dir, "postings"))
     ).collect()
     got: dict[str, list] = {}
     for r in long_form:
@@ -73,9 +92,6 @@ def test_compact_rerun_and_new_delta(spark, webpages_pdf, tmp_path):
     """Idempotency: a re-run after compaction is a no-op; a later delta folds
     only ITSELF (no re-union of already-folded deltas, no double-counted
     stats)."""
-    import json
-    import os
-
     idx_dir = str(tmp_path / "idx3")
     pdf = webpages_pdf.reset_index().rename(columns={"index": "doc_id"})
     docs = spark.createDataFrame(pdf.iloc[:100][["doc_id", "text"]])
@@ -88,25 +104,23 @@ def test_compact_rerun_and_new_delta(spark, webpages_pdf, tmp_path):
     incremental_index(spark, inp, idx_dir, schema, CFG)
     assert compact(spark, idx_dir, CFG)
 
-    with open(os.path.join(idx_dir, "field_stats.json")) as f:
-        fs1 = json.load(f)
+    fs1 = _field_stats(idx_dir)
     assert fs1["n_docs"] == 140 and len(fs1["folded_deltas"]) == 1
     # consumed deltas are recorded -> immediate re-run is a no-op
     assert compact(spark, idx_dir, CFG) == {}
-    with open(os.path.join(idx_dir, "field_stats.json")) as f:
-        assert json.load(f) == fs1
+    assert _field_stats(idx_dir) == fs1
 
     # a later delta folds alone on top of the compacted base
     spark.createDataFrame(pdf.iloc[140:170][["doc_id", "text"]]).write.mode(
         "append").parquet(inp)
     incremental_index(spark, inp, idx_dir, schema, CFG)
     assert compact(spark, idx_dir, CFG)
-    with open(os.path.join(idx_dir, "field_stats.json")) as f:
-        fs2 = json.load(f)
+    fs2 = _field_stats(idx_dir)
     assert fs2["n_docs"] == 170 and len(fs2["folded_deltas"]) == 2
 
     oracle = OracleIndex(list(zip(pdf.iloc[:170]["doc_id"], pdf.iloc[:170]["text"])))
-    long_form = decode_postings_df(spark.read.parquet(f"{idx_dir}/postings")).collect()
+    long_form = decode_postings_df(
+        spark.read.parquet(_live(idx_dir, "postings"))).collect()
     got: dict[str, list] = {}
     for r in long_form:
         got.setdefault(r["term"], []).append((r["doc_id"], r["tf"]))
@@ -116,13 +130,10 @@ def test_compact_rerun_and_new_delta(spark, webpages_pdf, tmp_path):
 
 
 def test_compact_recovers_stats_commit_crash(spark, webpages_pdf, tmp_path):
-    """Crash window between the postings swap and the stats commit: the
-    postings manifest already records the folded delta, so a re-run must
-    complete the stats commit WITHOUT unioning the delta into the (already
-    compacted) base again."""
-    import json
-    import os
-
+    """A lost commit (CURRENT rolled back one generation after a fold): the
+    re-run folds the same delta onto the same parent, reuses the committed
+    stages of the uncommitted generation and restores exact counts — the
+    delta is never unioned twice."""
     idx_dir = str(tmp_path / "idx4")
     pdf = webpages_pdf.reset_index().rename(columns={"index": "doc_id"})
     docs = spark.createDataFrame(pdf.iloc[:100][["doc_id", "text"]])
@@ -133,29 +144,16 @@ def test_compact_recovers_stats_commit_crash(spark, webpages_pdf, tmp_path):
     incremental_index(spark, inp, idx_dir, "doc_id long, text string", CFG)
     assert compact(spark, idx_dir, CFG)
 
-    n_rows = spark.read.parquet(f"{idx_dir}/postings").count()
-    fs_path = os.path.join(idx_dir, "field_stats.json")
-    with open(fs_path) as f:
-        fs_good = json.load(f)
-    # simulate the crash: stats commit rolled back to pre-compact state
-    batch = fs_good["folded_deltas"][0]
-    with open(os.path.join(idx_dir, "deltas", batch, "delta_stats.json")) as f:
-        ds = json.load(f)
-    fs_crash = dict(fs_good)
-    fs_crash["folded_deltas"] = []
-    fs_crash["n_docs"] -= ds["n_docs"]
-    fs_crash["total_len"] -= ds["total_len"]
-    with open(fs_path, "w") as f:
-        json.dump(fs_crash, f)
+    n_rows = spark.read.parquet(_live(idx_dir, "postings")).count()
+    fs_good = _field_stats(idx_dir)
+    with open(os.path.join(idx_dir, "CURRENT"), "w") as f:
+        f.write("gen-0\n")
+    assert _field_stats(idx_dir)["n_docs"] == 100
 
-    compact(spark, idx_dir, CFG)  # recovery run
-    with open(fs_path) as f:
-        fs_after = json.load(f)
-    assert fs_after["n_docs"] == fs_good["n_docs"]
-    assert fs_after["total_len"] == fs_good["total_len"]
-    assert fs_after["folded_deltas"] == fs_good["folded_deltas"]
-    # postings were NOT re-unioned: same physical row count
-    assert spark.read.parquet(f"{idx_dir}/postings").count() == n_rows
+    res = compact(spark, idx_dir, CFG)  # recovery run
+    assert res and all(r.skipped for r in res.values())
+    assert _field_stats(idx_dir) == fs_good
+    assert spark.read.parquet(_live(idx_dir, "postings")).count() == n_rows
 
 
 def _build_with_one_delta(spark, webpages_pdf, tmp_path, tag):
@@ -175,7 +173,8 @@ def _assert_matches_oracle(spark, idx_dir, corpus_pdf):
     """Postings AND term_stats exactly match a from-scratch oracle over the
     union corpus (catches both duplicated postings and stale df/cf)."""
     oracle = OracleIndex(list(zip(corpus_pdf["doc_id"], corpus_pdf["text"])))
-    long_form = decode_postings_df(spark.read.parquet(f"{idx_dir}/postings")).collect()
+    long_form = decode_postings_df(
+        spark.read.parquet(_live(idx_dir, "postings"))).collect()
     got: dict[str, list] = {}
     for r in long_form:
         got.setdefault(r["term"], []).append((r["doc_id"], r["tf"]))
@@ -184,96 +183,17 @@ def _assert_matches_oracle(spark, idx_dir, corpus_pdf):
         assert sorted(got[t]) == sorted(oracle.postings[t]), t
     stats = {
         r["term"]: (r["df"], r["cf"])
-        for r in spark.read.parquet(f"{idx_dir}/term_stats").collect()
+        for r in spark.read.parquet(_live(idx_dir, "term_stats")).collect()
     }
     for t, plist in oracle.postings.items():
         assert stats[t] == (len(plist), sum(tf for _, tf in plist)), t
 
 
-def test_compact_recovers_crash_between_stage_swaps(
-    spark, webpages_pdf, tmp_path, monkeypatch
-):
-    """Crash AFTER the postings swap but BEFORE the term_stats swap: on
-    recovery the live postings manifest already records the delta (so
-    to_compact is empty) — the orphaned term_stats_compacted snapshot must
-    still be installed, or df/cf stay permanently stale."""
-    import knowledgeir_spark.index.compact as cm
-
-    idx_dir, corpus = _build_with_one_delta(spark, webpages_pdf, tmp_path, "c1")
-
-    def swap_postings_then_crash(mgr):
-        cm._swap_one(mgr, "postings")
-        raise RuntimeError("simulated crash between stage swaps")
-
-    monkeypatch.setattr(cm, "_swap_compacted_stages", swap_postings_then_crash)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        compact(spark, idx_dir, CFG)
-    monkeypatch.undo()
-
-    # stale state is real: term_stats_compacted exists, live term_stats old
-    import os
-
-    assert os.path.isdir(f"{idx_dir}/term_stats_compacted")
-    res = compact(spark, idx_dir, CFG)  # recovery run
-    assert not os.path.isdir(f"{idx_dir}/term_stats_compacted")
-    _assert_matches_oracle(spark, idx_dir, corpus)
-    # and the recovery did NOT recompute/union anything (no new stage runs)
-    assert not any(not r.skipped for r in res.values())
-
-
-def test_compact_recovers_crash_before_manifest_replace(
-    spark, webpages_pdf, tmp_path, monkeypatch
-):
-    """Crash between the swap's data rename and its manifest replace: live
-    postings already contain the delta but the live manifest does not record
-    it.  Recovery must finish the manifest commit — NOT re-union the delta
-    into the already-compacted base (which would double df/cf)."""
-    import os
-
-    import knowledgeir_spark.index.compact as cm
-
-    idx_dir, corpus = _build_with_one_delta(spark, webpages_pdf, tmp_path, "c2")
-
-    def swap_without_manifest_then_crash(mgr, stage):
-        import shutil
-
-        old, new = mgr.stage_path(stage), mgr.stage_path(stage + "_compacted")
-        bak = old + ".bak"
-        os.rename(old, bak)
-        os.rename(new, old)
-        shutil.rmtree(bak, ignore_errors=True)
-        raise RuntimeError("simulated crash before manifest replace")
-
-    monkeypatch.setattr(cm, "_swap_one", swap_without_manifest_then_crash)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        compact(spark, idx_dir, CFG)
-    monkeypatch.undo()
-
-    # the dangerous state: compacted manifest present, its dir gone, live
-    # manifest still pre-compact
-    assert os.path.exists(f"{idx_dir}/_lineage/postings_compacted.json")
-    assert not os.path.isdir(f"{idx_dir}/postings_compacted")
-
-    compact(spark, idx_dir, CFG)  # recovery run
-    assert not os.path.exists(f"{idx_dir}/_lineage/postings_compacted.json")
-    _assert_matches_oracle(spark, idx_dir, corpus)
-
-    import json
-
-    with open(f"{idx_dir}/field_stats.json") as f:
-        fs = json.load(f)
-    assert fs["n_docs"] == 130 and len(fs["folded_deltas"]) == 1
-    # idempotent afterwards
-    assert compact(spark, idx_dir, CFG) == {}
-
-
 def test_compact_rewrites_only_touched_buckets(spark, webpages_pdf, tmp_path):
     """Per-bucket incremental merge: a delta touching one term-hash bucket
-    must leave every other bucket's parquet files physically intact (same
-    inodes, carried as hardlinks) while the merged index still matches a
-    from-scratch oracle."""
-    import os
-
+    must carry every other bucket's parquet files into the new generation
+    physically intact (same inodes, hardlinks of the parent's files) while
+    the merged index still matches a from-scratch oracle."""
     from knowledgeir_spark.index.build import term_bucket_py
     from knowledgeir_spark.plans.lineage import StageManager
 
@@ -292,7 +212,7 @@ def test_compact_rewrites_only_touched_buckets(spark, webpages_pdf, tmp_path):
     incremental_index(spark, inp, idx_dir, "doc_id long, text string", CFG)
 
     def bucket_inodes(bucket: int) -> set[int]:
-        d = os.path.join(idx_dir, "postings", f"bucket={bucket}")
+        d = os.path.join(_live(idx_dir, "postings"), f"bucket={bucket}")
         return {
             os.stat(os.path.join(d, f)).st_ino
             for f in os.listdir(d)
@@ -304,7 +224,8 @@ def test_compact_rewrites_only_touched_buckets(spark, webpages_pdf, tmp_path):
 
     assert compact(spark, idx_dir, CFG)
 
-    m = StageManager(idx_dir).manifest("postings")
+    assert live_generation(idx_dir).endswith("gen-1")
+    m = StageManager(live_generation(idx_dir)).manifest("postings")
     assert m["config"]["touched_buckets"] == [tb]
     for b, inodes in pre.items():
         assert bucket_inodes(b) == inodes, f"bucket {b} was rewritten"
@@ -320,14 +241,9 @@ def test_compact_rewrites_only_touched_buckets(spark, webpages_pdf, tmp_path):
 
 
 def test_append_compaction_equals_fresh_oracle(spark, webpages_pdf, tmp_path):
-    """mode='append': O(delta) compaction — base files carry over by inode
-    (nothing decoded or rewritten), delta blocks land in their bucket dirs,
-    term_stats sum exactly — and the result matches a from-scratch oracle
-    and answers queries rank-identically."""
-    import os
-
-    from knowledgeir_spark.index.query import IndexReader
-
+    """mode='append' is still accepted and names the same fold: the result
+    matches a from-scratch oracle, answers queries rank-identically, and a
+    later fold without the keyword composes with it."""
     idx_dir = str(tmp_path / "idx_app")
     pdf = webpages_pdf.reset_index().rename(columns={"index": "doc_id"})
     docs = spark.createDataFrame(pdf.iloc[:200][["doc_id", "text"]])
@@ -342,19 +258,11 @@ def test_append_compaction_equals_fresh_oracle(spark, webpages_pdf, tmp_path):
         "append").parquet(inp)
     incremental_index(spark, inp, idx_dir, schema, CFG)
 
-    def inodes(root):
-        out = set()
-        for dp, _dn, fns in os.walk(root):
-            for fn in fns:
-                if fn.endswith(".parquet"):
-                    out.add(os.stat(os.path.join(dp, fn)).st_ino)
-        return out
-
-    base_inodes = inodes(os.path.join(idx_dir, "postings"))
+    with pytest.raises(ValueError, match="unknown compaction mode"):
+        compact(spark, idx_dir, CFG, mode="defrag")
     res = compact(spark, idx_dir, CFG, mode="append")
-    assert res and not any(r.skipped for r in res.values())
-    after = inodes(os.path.join(idx_dir, "postings"))
-    assert base_inodes <= after  # every base file carried over untouched
+    assert set(res) == {"postings_compacted", "term_stats_compacted"}
+    assert not any(r.skipped for r in res.values())
 
     _assert_matches_oracle(spark, idx_dir, pdf.iloc[:300])
 
@@ -373,14 +281,12 @@ def test_append_compaction_equals_fresh_oracle(spark, webpages_pdf, tmp_path):
             assert r["score"] == pytest.approx(dict(expected)[r["doc_id"]],
                                                abs=1e-6)
 
-    # a later delta can be folded by the MERGE mode on top of the appended
-    # snapshot (defragmentation path composes with the fast path)
     extra = pdf.iloc[:50].copy()
     extra["doc_id"] = extra["doc_id"] + 1000
     spark.createDataFrame(extra[["doc_id", "text"]]).write.mode(
         "append").parquet(inp)
     incremental_index(spark, inp, idx_dir, schema, CFG)
-    assert compact(spark, idx_dir, CFG, mode="merge")
+    assert compact(spark, idx_dir, CFG)
     full = list(zip(pdf.iloc[:300]["doc_id"], pdf.iloc[:300]["text"])) + list(
         zip(extra["doc_id"], extra["text"])
     )
@@ -391,83 +297,10 @@ def test_append_compaction_equals_fresh_oracle(spark, webpages_pdf, tmp_path):
     )
 
 
-def test_append_auto_defrag_rewrites_only_fragmented_buckets(
-    spark, webpages_pdf, tmp_path
-):
-    """Tiering policy: repeated append folds fragment a bucket's dir; once
-    its file count crosses auto_defrag_files, compact(mode='append')
-    re-blocks THAT bucket automatically while buckets under the threshold
-    keep their files byte-identical (same inodes), and the defragged index
-    still matches the from-scratch oracle."""
-    import os
-
-    from knowledgeir_spark.index.build import term_bucket_py
-    from knowledgeir_spark.index.compact import fragmented_buckets
-    from knowledgeir_spark.plans.lineage import StageManager
-
-    idx_dir = str(tmp_path / "idx_defrag")
-    pdf = webpages_pdf.reset_index().rename(columns={"index": "doc_id"})
-    docs = spark.createDataFrame(pdf.iloc[:120][["doc_id", "text"]])
-    build_index(spark, docs, idx_dir, CFG, input_token="base120")
-
-    inp = str(tmp_path / "arr_defrag")
-    schema = "doc_id long, text string"
-    term = "zqxjkvbn"  # single novel term -> deltas touch exactly one bucket
-    tb = term_bucket_py(term, CFG.n_buckets)
-
-    def bucket_files(b):
-        d = os.path.join(idx_dir, "postings", f"bucket={b}")
-        return {f: os.stat(os.path.join(d, f)).st_ino
-                for f in os.listdir(d) if f.endswith(".parquet")}
-
-    for i in range(5):
-        spark.createDataFrame(
-            [(500 + i, term)], schema
-        ).write.mode("append").parquet(inp)
-        incremental_index(spark, inp, idx_dir, schema, CFG)
-        assert compact(spark, idx_dir, CFG, mode="append",
-                       auto_defrag_files=None)  # fast path only, no defrag
-
-    counts = {b: len(bucket_files(b)) for b in range(CFG.n_buckets)}
-    others_max = max(c for b, c in counts.items() if b != tb)
-    assert counts[tb] > others_max  # only the delta bucket fragmented
-    assert fragmented_buckets(idx_dir, others_max) == [tb]
-    keep = {b: bucket_files(b) for b in range(CFG.n_buckets) if b != tb}
-
-    # one more delta; this fold defrags the fragmented bucket automatically
-    spark.createDataFrame(
-        [(600, term)], schema
-    ).write.mode("append").parquet(inp)
-    incremental_index(spark, inp, idx_dir, schema, CFG)
-    res = compact(spark, idx_dir, CFG, mode="append",
-                  auto_defrag_files=others_max)
-    assert "defrag" in res, res
-    assert res["defrag"]["defragged_buckets"] == [tb]
-    m = StageManager(idx_dir).manifest("postings")
-    assert m["config"]["mode"] == "defrag"
-    assert len(bucket_files(tb)) <= others_max  # re-blocked, fewer files
-    for b, files in keep.items():
-        now = bucket_files(b)
-        for f, ino in files.items():
-            assert now.get(f) == ino, f"bucket {b} file {f} rewritten"
-
-    corpus = list(zip(pdf.iloc[:120]["doc_id"], pdf.iloc[:120]["text"])) + [
-        (500 + i, term) for i in range(5)
-    ] + [(600, term)]
-    import pandas as pd
-
-    _assert_matches_oracle(
-        spark, idx_dir, pd.DataFrame(corpus, columns=["doc_id", "text"])
-    )
-    # idempotent: nothing pending, nothing fragmented at the new layout
-    assert compact(spark, idx_dir, CFG, mode="append",
-                   auto_defrag_files=others_max) == {}
-
-
 def test_impact_layout_through_delta_lifecycle(spark, webpages_pdf, tmp_path):
     """block_order='impact' composes with the whole lifecycle: base build ->
-    streaming delta -> append fold -> merge defrag, and the result still
-    matches the from-scratch oracle (the re-block paths all thread
+    streaming delta -> fold -> second delta -> fold, and the result still
+    matches the from-scratch oracle (the block writer threads
     config.block_order)."""
     from knowledgeir_spark.index.build import IndexConfig
 
@@ -482,13 +315,13 @@ def test_impact_layout_through_delta_lifecycle(spark, webpages_pdf, tmp_path):
     spark.createDataFrame(pdf.iloc[150:180][["doc_id", "text"]]).write.mode(
         "append").parquet(inp)
     incremental_index(spark, inp, idx_dir, schema, cfg)
-    assert compact(spark, idx_dir, cfg, mode="append")
+    assert compact(spark, idx_dir, cfg)
     _assert_matches_oracle(spark, idx_dir, pdf.iloc[:180])
 
     spark.createDataFrame(pdf.iloc[180:200][["doc_id", "text"]]).write.mode(
         "append").parquet(inp)
     incremental_index(spark, inp, idx_dir, schema, cfg)
-    assert compact(spark, idx_dir, cfg, mode="merge")
+    assert compact(spark, idx_dir, cfg)
     _assert_matches_oracle(spark, idx_dir, pdf.iloc[:200])
     reader = IndexReader(spark, idx_dir)
     assert reader.block_order == "impact"
@@ -498,7 +331,7 @@ def test_append_fold_batching_policy(spark, webpages_pdf, tmp_path):
     """min_pending_deltas defers the fold until enough deltas accumulate
     (round-6 freshness-throughput knob); the deferred fold then lands all
     pending deltas in ONE pass and the result matches the from-scratch
-    oracle.  Crash-window deltas always fold regardless of the policy."""
+    oracle."""
     idx_dir = str(tmp_path / "idx_batch")
     pdf = webpages_pdf.reset_index().rename(columns={"index": "doc_id"})
     docs = spark.createDataFrame(pdf.iloc[:200][["doc_id", "text"]])
@@ -510,16 +343,132 @@ def test_append_fold_batching_policy(spark, webpages_pdf, tmp_path):
         spark.createDataFrame(pdf.iloc[lo:hi][["doc_id", "text"]]).write.mode(
             "append").parquet(inp)
         incremental_index(spark, inp, idx_dir, schema, CFG)
-        res = compact(spark, idx_dir, CFG, mode="append",
-                      min_pending_deltas=3)
+        res = compact(spark, idx_dir, CFG, min_pending_deltas=3)
         assert res.get("deferred") is True
     # third delta crosses the threshold -> one fold of all three
     spark.createDataFrame(pdf.iloc[260:300][["doc_id", "text"]]).write.mode(
         "append").parquet(inp)
     incremental_index(spark, inp, idx_dir, schema, CFG)
-    res = compact(spark, idx_dir, CFG, mode="append", min_pending_deltas=3)
+    res = compact(spark, idx_dir, CFG, min_pending_deltas=3)
     assert res and "deferred" not in res
     _assert_matches_oracle(spark, idx_dir, pdf.iloc[:300])
     # idempotent + policy no-op afterwards
-    assert compact(spark, idx_dir, CFG, mode="append",
-                   min_pending_deltas=3) == {}
+    assert compact(spark, idx_dir, CFG, min_pending_deltas=3) == {}
+
+
+def _answers(reader, queries):
+    """(search_local rows, search().collect() rows) per query, in rank
+    order, with exact float scores."""
+    local = {q: reader.search_local([(q, t)], k=10) for q, t in queries}
+    dist = {
+        q: sorted((r["rank"], r["doc_id"], r["score"])
+                  for r in reader.search([(q, t)], k=10).collect())
+        for q, t in queries
+    }
+    return local, dist
+
+
+def test_reader_pinned_across_fold(spark, webpages_pdf, tmp_path):
+    """A reader opened before a fold keeps answering from its generation —
+    the same pre-fold top-k on the serving and the distributed path — while
+    a fresh reader sees the fold and matches the union-corpus oracle."""
+    idx_dir, corpus = _build_with_one_delta(spark, webpages_pdf, tmp_path, "pin")
+    queries = [("1", "the data spark w0005"), ("2", "w0100 w0200"),
+               ("3", "index")]
+    stale = IndexReader(spark, idx_dir)
+    before = _answers(stale, queries)
+
+    assert compact(spark, idx_dir, CFG)
+    assert _answers(stale, queries) == before
+    assert stale.field_stats["n_docs"] == 100
+
+    fresh = IndexReader(spark, idx_dir)
+    assert fresh.field_stats["n_docs"] == 130
+    oracle = OracleIndex(list(zip(corpus["doc_id"], corpus["text"])))
+    local, dist = _answers(fresh, queries)
+    for qid, qtext in queries:
+        expected = oracle.topk(qtext, k=10)
+        assert [d for _, d, _ in dist[qid]] == [d for d, _ in expected], qtext
+        assert [r[1] for r in local[qid]] == [d for d, _ in expected], qtext
+        for _, d, score in dist[qid]:
+            assert score == pytest.approx(dict(expected)[d], abs=1e-6)
+
+
+@pytest.mark.parametrize("when", ["before", "after"])
+def test_compact_crash_at_commit_point(
+    spark, webpages_pdf, tmp_path, monkeypatch, when
+):
+    """A crash just before or just after the CURRENT replace leaves exactly
+    the old or exactly the new generation live, and a re-run reaches the
+    uninterrupted result without recomputing a committed stage."""
+    import knowledgeir_spark.plans.lineage as lineage
+
+    idx_dir, corpus = _build_with_one_delta(spark, webpages_pdf, tmp_path, when)
+    real_replace = os.replace
+
+    def crash_at_commit(src, dst):
+        if os.path.basename(dst) == "CURRENT":
+            if when == "after":
+                real_replace(src, dst)
+            raise RuntimeError("simulated crash at the commit point")
+        real_replace(src, dst)
+
+    monkeypatch.setattr(lineage.os, "replace", crash_at_commit)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        compact(spark, idx_dir, CFG)
+    monkeypatch.undo()
+
+    live = {"before": "gen-0", "after": "gen-1"}[when]
+    assert os.path.basename(live_generation(idx_dir)) == live
+    assert IndexReader(spark, idx_dir).field_stats["n_docs"] == (
+        100 if when == "before" else 130
+    )
+
+    res = compact(spark, idx_dir, CFG)  # re-run
+    if when == "before":
+        assert res and all(r.skipped for r in res.values())
+    else:
+        assert res == {}
+    assert os.path.basename(live_generation(idx_dir)) == "gen-1"
+    assert _generations(idx_dir) == ["gen-0", "gen-1"]
+    _assert_matches_oracle(spark, idx_dir, corpus)
+    assert compact(spark, idx_dir, CFG) == {}
+
+
+def test_three_folds_keep_two_generations(spark, webpages_pdf, tmp_path):
+    """Retention keeps the live generation and its parent: after three folds
+    only gen-2 and gen-3 remain, and a reader pinned to gen-2 still reads."""
+    idx_dir = str(tmp_path / "idx_ret")
+    pdf = webpages_pdf.reset_index().rename(columns={"index": "doc_id"})
+    docs = spark.createDataFrame(pdf.iloc[:100][["doc_id", "text"]])
+    build_index(spark, docs, idx_dir, CFG, input_token="base100")
+    inp = str(tmp_path / "arr_ret")
+    schema = "doc_id long, text string"
+    for lo in (100, 120, 140):
+        if lo == 140:
+            pinned = IndexReader(spark, idx_dir)
+        spark.createDataFrame(pdf.iloc[lo:lo + 20][["doc_id", "text"]]).write \
+            .mode("append").parquet(inp)
+        incremental_index(spark, inp, idx_dir, schema, CFG)
+        assert compact(spark, idx_dir, CFG)
+    assert _generations(idx_dir) == ["gen-2", "gen-3"]
+    assert os.path.basename(live_generation(idx_dir)) == "gen-3"
+    assert pinned.field_stats["n_docs"] == 140
+    assert pinned.search_local([("1", "index")], k=5)
+    _assert_matches_oracle(spark, idx_dir, pdf.iloc[:160])
+
+
+def test_sidecars_require_committed_index(spark, webpages_pdf, tmp_path):
+    """Sidecar builders read the tokenizer and bucket count of the live
+    generation; without a CURRENT they raise instead of guessing."""
+    from knowledgeir_spark.index.nextword import write_nextword_store
+    from knowledgeir_spark.index.positions import write_positions_store
+
+    pdf = webpages_pdf.reset_index().rename(columns={"index": "doc_id"})
+    docs = spark.createDataFrame(pdf.iloc[:20][["doc_id", "text"]])
+    empty = str(tmp_path / "no_index")
+    os.makedirs(empty)
+    with pytest.raises(FileNotFoundError, match="CURRENT"):
+        write_positions_store(docs, empty)
+    with pytest.raises(FileNotFoundError, match="CURRENT"):
+        write_nextword_store(docs, empty)

@@ -16,6 +16,7 @@ from knowledgeir_spark.index.build import IndexConfig, build_index, term_bucket_
 from knowledgeir_spark.index.codec import decode_block
 from knowledgeir_spark.index.query import IndexReader
 from knowledgeir_spark.oracle.index import OracleIndex
+from knowledgeir_spark.plans.lineage import live_generation
 
 CFG = IndexConfig(block_size=16, salt_range=64, n_buckets=8, build_partitions=8)
 
@@ -39,7 +40,8 @@ def test_stages_committed(built):
 
 
 def test_postings_decode_to_oracle(spark, built):
-    rows = spark.read.parquet(f"{built['idx_dir']}/postings").collect()
+    rows = spark.read.parquet(
+        f"{live_generation(built['idx_dir'])}/postings").collect()
     got: dict[str, list] = {}
     for r in rows:
         assert r["bucket"] == term_bucket_py(r["term"], CFG.n_buckets)
@@ -61,7 +63,8 @@ def test_postings_decode_to_oracle(spark, built):
 
 
 def test_term_stats_match_oracle(spark, built):
-    rows = spark.read.parquet(f"{built['idx_dir']}/term_stats").collect()
+    rows = spark.read.parquet(
+        f"{live_generation(built['idx_dir'])}/term_stats").collect()
     o = built["oracle"]
     assert {r["term"]: r["df"] for r in rows} == {t: int(v) for t, v in o.df.items()}
     cf = {r["term"]: r["cf"] for r in rows}
@@ -105,14 +108,18 @@ def test_resume_skips_committed_stages(spark, built):
 def test_crashed_stage_recomputed(spark, built):
     import os
 
-    # simulate crash between data rename and manifest write for term_stats
-    os.remove(f"{built['idx_dir']}/_lineage/term_stats.json")
+    # simulate a crash between term_stats' data rename and manifest write:
+    # the generation was never committed, so CURRENT does not exist yet
+    gen = live_generation(built["idx_dir"])
+    os.remove(f"{built['idx_dir']}/CURRENT")
+    os.remove(f"{gen}/_lineage/term_stats.json")
     res = build_index(
         spark, built["docs"], built["idx_dir"], CFG, input_token="webpages300"
     )
     assert res["doc_terms"].skipped and res["postings"].skipped
     assert not res["term_stats"].skipped
     assert res["term_stats"].rows > 0
+    assert live_generation(built["idx_dir"]) == gen
 
 
 def test_config_change_recomputes(spark, built, tmp_path_factory):
@@ -420,7 +427,7 @@ def test_impact_layout_rank_identical_and_discriminative(
     # with block_id under impact order but not under docid order
     from pyspark.sql import functions as F
 
-    post = spark.read.parquet(f"{idx_dir}/postings")
+    post = spark.read.parquet(f"{live_generation(idx_dir)}/postings")
     head_term = (
         post.groupBy("term").count().orderBy(F.desc("count"), "term")
         .first()["term"]
@@ -498,7 +505,8 @@ def test_reader_suggest_matches_spark_operator(spark, built):
     from knowledgeir_spark.operators.spell import spell_correct
 
     rd = IndexReader(spark, built["idx_dir"])
-    vocab = spark.read.parquet(f"{built['idx_dir']}/term_stats").select("term", "df")
+    vocab = spark.read.parquet(
+        f"{live_generation(built['idx_dir'])}/term_stats").select("term", "df")
     # derive typo inputs from real vocab terms (drop 3rd char) + controls
     terms = [r["term"] for r in vocab.orderBy(F.col("df").desc()).limit(8).collect()]
     inputs = [t[:2] + t[3:] for t in terms if len(t) >= 5] + ["zzzzqq", terms[0]]
@@ -604,8 +612,9 @@ def test_sharded_suggest_sums_global_df(spark, built, tmp_path_factory):
     mono = IndexReader(spark, built["idx_dir"])
     # pick a real vocab term, misspell it, and require the same correction
     # with the same (global) df the monolith reports
-    stats = spark.read.parquet(f"{built['idx_dir']}/term_stats").orderBy(
-        "df", ascending=False).limit(1).collect()[0]
+    stats = spark.read.parquet(
+        f"{live_generation(built['idx_dir'])}/term_stats"
+    ).orderBy("df", ascending=False).limit(1).collect()[0]
     term, df = stats["term"], float(stats["df"])
     typo = term[:2] + term[3:] if len(term) >= 5 else term + "x"
     got = sh.suggest([typo, term])

@@ -45,7 +45,8 @@ def test_spark_submit_build_and_query(tmp_path, webpages_pdf):
         "build_index.py", "--input", str(docs_path), "--output", str(idx),
         "--n-buckets", "4",
     )
-    assert (idx / "field_stats.json").exists()
+    gen = (idx / "CURRENT").read_text().strip()
+    assert (idx / gen / "field_stats.json").exists()
     out = tmp_path / "run.trec"
     submit(
         "query_index.py", "--index", str(idx), "--queries", str(qfile),
